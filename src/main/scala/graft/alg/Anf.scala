@@ -143,8 +143,8 @@ object Anf {
           val p = s"$dir/superstep=$h/data"
           require(java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
             s"cannot resume ANF: superstep $h checkpoint missing at $p — " +
-              "hop-indexed history is not reconstructable (was the dir " +
-              "cleaned, or checkpointEvery > 1?); rerun without resume")
+              "hop-indexed history is not reconstructable (was part of the " +
+              "checkpoint dir deleted?); rerun without resume")
           history += graft.sources.TableIO.read(spark, p)
             .agg(sum(ballEst)).collect()(0).getDouble(0)
         }

@@ -44,6 +44,7 @@ object LabelPropagation {
                 stableIterations: Int = StableIterations,
                 pruneTopK: Int = 0,
                 checkpointDir: Option[String] = None,
+                resume: Boolean = false,
                 verbose: Boolean = false): Result = {
     val spark = edges.sparkSession
     val e = edges.select(col(Graph.SRC), col(Graph.DST))
@@ -75,7 +76,7 @@ object LabelPropagation {
 
     val outcome = Superstep.run(init,
       Superstep.Config(maxSupersteps = maxIterations, checkpointDir = checkpointDir,
-        verbose = verbose)) { (state, iter) =>
+        resume = resume, verbose = verbose)) { (state, iter) =>
       // P'[v][l] = Σ_{u∈N(v)} P[u][l] / deg(v): messages flow along edge
       // (v,u) from u to v ⇒ join dist(u) on e.dst = u, group by e.src = v.
       val exploded = state.select(col(Graph.VID), explode(col("dist")).as("kv"))

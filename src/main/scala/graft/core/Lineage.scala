@@ -18,7 +18,8 @@ import org.apache.spark.storage.StorageLevel
  * "BigInteger would overflow supported range" (see GraftSql docs).
  *
  * Every iterative driver in this engine MUST cut lineage through this
- * helper (or write a parquet checkpoint) once per superstep.
+ * helper once per superstep ([[cutLazily]] when the superstep's own
+ * checkpoint write is the job that materializes it).
  *
  * The blocks behind a cut frame live in the block manager only (a local
  * checkpoint has no recompute path), and the rebuilt DataFrame is not
@@ -35,10 +36,21 @@ object Lineage {
   private val backing = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, RDD[_]]())
 
-  def cut(df: DataFrame): DataFrame = {
-    val ckpt = df.localCheckpoint(eager = true)
+  def cut(df: DataFrame): DataFrame = register(df.localCheckpoint(eager = true))
+
+  /**
+   * [[cut]] without its job: marks `df`'s rows for local checkpoint at
+   * `level` (Spark adds disk to it) and returns the frame over them. The
+   * first job that reads the returned frame computes `df` once, fills the
+   * blocks and truncates the lineage; every later plan reads the blocks.
+   * Release `df`'s inputs only after that job has run.
+   */
+  def cutLazily(df: DataFrame, level: StorageLevel): DataFrame =
+    register(df.localCheckpoint(eager = false, level))
+
+  private def register(ckpt: DataFrame): DataFrame = {
     val rdd = ckpt.queryExecution.toRdd
-    val out = GraftSql.fromInternalRdd(df.sparkSession, rdd, ckpt.schema)
+    val out = GraftSql.fromInternalRdd(ckpt.sparkSession, rdd, ckpt.schema)
     backing.put(out, findPersisted(rdd).getOrElse(rdd))
     out
   }

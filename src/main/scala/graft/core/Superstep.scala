@@ -1,10 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable.ArrayBuffer
+import scala.util.Try
 
 /** One superstep's ledger row — the analog of Totem's per-phase timers
  * (`/root/reference/src/totem/totem.h:22-37`, `totem_engine.cu:166-186`)
@@ -27,26 +28,24 @@ final case class StepResult(state: DataFrame, edgesTraversed: Long, converged: B
  * BSP driver loop — the Spark-native `engine_execute`
  * (`/root/reference/src/totem/totem_engine.cu:214-234`). Each superstep is
  * one Spark job: join/aggregate/update, then a lineage barrier. The barrier
- * (persist-and-materialize or checkpoint-to-parquet) replaces Totem's
+ * (a local checkpoint of the new state) replaces Totem's
  * `grooves_synchronize` and is MANDATORY for plan-growth control: a
  * 25-iteration loop of joins would otherwise blow up the optimizer.
  *
- * With a `checkpointDir`, every superstep writes its state table plus a
- * `manifest.json` carrying lineage (parent superstep, input fingerprint) and
- * metrics (wall ms, per-partition row counts, edges traversed, GTEPS), and a
- * crashed run resumes from the last complete superstep.
+ * With a `checkpointDir`, the barrier job also writes the state table and
+ * counts its rows per partition; `manifest.json` then records lineage
+ * (parent superstep, data path) and metrics (wall ms, per-partition row
+ * counts, edges traversed, GTEPS). The run itself never reads the table
+ * back: the next superstep reads the locally checkpointed blocks, and the
+ * table is read only when a crashed run resumes from the last superstep
+ * whose manifest is complete.
  */
 object Superstep {
 
   final case class Config(
       maxSupersteps: Int = 100,
       checkpointDir: Option[String] = None,
-      /** checkpoint to parquet every k supersteps (1 = each); in between,
-       * persist + localCheckpoint keeps lineage short without disk I/O. */
-      checkpointEvery: Int = 1,
       resume: Boolean = false,
-      /** record per-partition row counts in the manifest (extra tiny job). */
-      partitionLineage: Boolean = true,
       verbose: Boolean = false)
 
   final case class Outcome(state: DataFrame, metrics: Seq[StepMetrics]) {
@@ -78,36 +77,27 @@ object Superstep {
     while (!done && superstep <= cfg.maxSupersteps) {
       val t0 = System.nanoTime()
       val res = step(state, superstep)
-      val doParquet = cfg.checkpointDir.isDefined && (superstep % cfg.checkpointEvery == 0)
-      val (newState, rows, perPart) =
-        if (doParquet) {
-          val out = writeCheckpoint(res.state, cfg, superstep)
-          // a step that cut its own state leaves checkpoint blocks behind;
-          // the parquet copy supersedes them
-          if (res.state ne state) Lineage.release(res.state)
-          out
-        } else {
-          // steps that probe convergence materialize (Lineage.cut) their own
-          // state first — don't execute the step plan a second time here
-          val s = if (Lineage.isCut(res.state)) res.state else materialize(res.state)
-          // the row count is ledger-only; skip the extra per-superstep job
-          // unless someone reads it (manifest path counts via partitions)
-          val rows = if (cfg.verbose) s.count() else -1L
-          (s, rows, Map.empty[Int, Long])
-        }
+      val (newState, perPart) = cfg.checkpointDir match {
+        case Some(dir) => writeCheckpoint(res.state, dir, superstep)
+        // steps that probe convergence materialize (Lineage.cut) their own
+        // state first — don't execute the step plan a second time here
+        case None =>
+          (if (Lineage.isCut(res.state)) res.state else materialize(res.state), Map.empty[Int, Long])
+      }
+      // without a checkpoint the row count is ledger-only: skip the extra
+      // per-superstep job unless someone prints it
+      val rows =
+        if (cfg.checkpointDir.isDefined) perPart.values.sum
+        else if (cfg.verbose) newState.count() else -1L
       val wallMs = (System.nanoTime() - t0) / 1000000
       val m = StepMetrics(superstep, wallMs, rows, res.edgesTraversed, res.converged)
       metrics += m
-      if (doParquet) writeManifest(cfg.checkpointDir.get, m, perPart, cfg)
+      cfg.checkpointDir.foreach(writeManifest(_, m, perPart))
       if (cfg.verbose)
         println(f"[superstep $superstep%3d] rows=$rows%,d trvEdges=${res.edgesTraversed}%,d " +
           f"wall=${wallMs}ms gteps=${m.gteps}%.4f converged=${res.converged}")
-      // free the previous superstep's cache (unpersist covers cache-manager
-      // entries from parquet re-reads; release covers localCheckpoint blocks)
-      if (state ne newState) {
-        state.unpersist(blocking = false)
-        Lineage.release(state)
-      }
+      // the new state is materialized: free the previous one's blocks
+      if (state ne newState) Lineage.release(state)
       state = newState
       done = res.converged
       superstep += 1
@@ -119,39 +109,50 @@ object Superstep {
    * caches at MEMORY_AND_DISK itself; an extra persist would double-cache). */
   private def materialize(df: DataFrame): DataFrame = Lineage.cut(df)
 
-  private def writeCheckpoint(df: DataFrame, cfg: Config, superstep: Int): (DataFrame, Long, Map[Int, Long]) = {
-    val dir = cfg.checkpointDir.get
-    val path = s"$dir/superstep=$superstep/data"
-    graft.sources.TableIO.write(df, path)
-    val spark = df.sparkSession
-    val re = graft.sources.TableIO.read(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    val perPart: Map[Int, Long] =
-      if (cfg.partitionLineage)
-        re.groupBy(spark_partition_id().as("pid")).count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      else Map.empty
-    val rows = if (cfg.partitionLineage) perPart.values.sum else re.count()
-    (re, rows, perPart)
+  /**
+   * The checkpointed barrier in ONE job: the state is marked for local
+   * checkpoint and written, so the write computes the step plan, fills the
+   * blocks the next superstep reads and counts the rows per partition. A
+   * state the step already cut is written from its blocks and kept. The
+   * blocks are stored serialized: the table is the durable copy.
+   */
+  private def writeCheckpoint(df: DataFrame, dir: String, superstep: Int): (DataFrame, Map[Int, Long]) = {
+    val state =
+      if (Lineage.isCut(df)) df else Lineage.cutLazily(df, StorageLevel.MEMORY_AND_DISK_SER)
+    (state, graft.sources.TableIO.writeCounted(state, dataPath(dir, superstep)))
   }
 
-  private def writeManifest(dir: String, m: StepMetrics, perPart: Map[Int, Long], cfg: Config): Unit = {
-    val pp = perPart.toSeq.sortBy(_._1)
-      .map { case (p, n) => s"""{"partition":$p,"rows":$n}""" }.mkString("[", ",", "]")
-    // the parent is the previous CHECKPOINTED superstep: with
-    // checkpointEvery > 1 the intermediate steps were only localCheckpoint'ed
-    // and have no data dir — recording N-1 would point lineage at a path
-    // that never existed
-    val parentStep = m.superstep - cfg.checkpointEvery
-    val parent = if (parentStep < 1) "null" else s""""$dir/superstep=$parentStep/data""""
-    val json =
-      s"""{"superstep":${m.superstep},"status":"complete","wall_ms":${m.wallMs},
-         |"state_rows":${m.stateRows},"edges_traversed":${m.edgesTraversed},
-         |"gteps":${m.gteps},"converged":${m.converged},
-         |"lineage":{"parent":$parent,"data":"$dir/superstep=${m.superstep}/data"},
-         |"partitions":$pp}""".stripMargin.replace("\n", "")
-    val p = Paths.get(s"$dir/superstep=${m.superstep}/manifest.json")
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, json)
+  private def stepDir(dir: String, superstep: Int): Path = Paths.get(dir, s"superstep=$superstep")
+  private def dataPath(dir: String, superstep: Int): String = stepDir(dir, superstep).resolve("data").toString
+
+  private val json = new ObjectMapper()
+
+  /** The manifest is the superstep's commit marker: written to a temp file
+   * in the superstep's directory, then renamed into place atomically, so a
+   * reader sees either no manifest or a whole one. */
+  private def writeManifest(dir: String, m: StepMetrics, perPart: Map[Int, Long]): Unit = {
+    val root = json.createObjectNode()
+      .put("superstep", m.superstep).put("status", "complete").put("wall_ms", m.wallMs)
+      .put("state_rows", m.stateRows).put("edges_traversed", m.edgesTraversed)
+      .put("gteps", m.gteps).put("converged", m.converged)
+    val lineage = root.putObject("lineage")
+    if (m.superstep > 1) lineage.put("parent", dataPath(dir, m.superstep - 1))
+    else lineage.putNull("parent")
+    lineage.put("data", dataPath(dir, m.superstep))
+    val parts = root.putArray("partitions")
+    perPart.toSeq.sortBy(_._1).foreach { case (p, n) =>
+      parts.addObject().put("partition", p).put("rows", n)
+    }
+    val d = Files.createDirectories(stepDir(dir, m.superstep))
+    val tmp = Files.createTempFile(d, "manifest", ".tmp")
+    Files.writeString(tmp, json.writeValueAsString(root))
+    Files.move(tmp, d.resolve("manifest.json"), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The superstep's manifest, if it exists and parses. */
+  private def manifest(dir: String, superstep: Int): Option[JsonNode] = {
+    val mf = stepDir(dir, superstep).resolve("manifest.json")
+    if (!Files.exists(mf)) None else Try(json.readTree(mf.toFile)).toOption
   }
 
   /** Latest superstep whose manifest says complete (crash-safe resume point). */
@@ -164,30 +165,20 @@ object Superstep {
     val listing = Files.list(root)
     val steps =
       try {
-        listing.iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("superstep="))
-          .flatMap { p =>
-            val ss = p.getFileName.toString.stripPrefix("superstep=").toIntOption
-            val mf = p.resolve("manifest.json")
-            ss.filter(_ => Files.exists(mf) &&
-              Files.readString(mf).contains(""""status":"complete""""))
-              .map(s => (s, p.resolve("data").toString))
-          }.toSeq
+        listing.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("superstep="))
+          .flatMap(_.stripPrefix("superstep=").toIntOption).toSeq
       } finally listing.close()
-    steps.sortBy(_._1).lastOption
+    steps
+      .filter(ss => manifest(dir, ss).exists(_.path("status").asText() == "complete"))
+      .maxOption.map(ss => (ss, dataPath(dir, ss)))
   }
 
   private def readLedger(dir: String, upTo: Int): Seq[StepMetrics] =
     (1 to upTo).flatMap { ss =>
-      val mf = Paths.get(s"$dir/superstep=$ss/manifest.json")
-      if (!Files.exists(mf)) None
-      else {
-        val s = Files.readString(mf)
-        def num(k: String): Option[Long] =
-          ("\"" + k + "\":(-?[0-9]+)").r.findFirstMatchIn(s).map(_.group(1).toLong)
-        for {
-          wall <- num("wall_ms"); rows <- num("state_rows"); trv <- num("edges_traversed")
-        } yield StepMetrics(ss, wall, rows, trv, s.contains("\"converged\":true"))
+      manifest(dir, ss).map { mf =>
+        StepMetrics(ss, mf.path("wall_ms").asLong(), mf.path("state_rows").asLong(),
+          mf.path("edges_traversed").asLong(), mf.path("converged").asBoolean())
       }
     }
 }

@@ -1,6 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftinternal.GraftSql
+import scala.jdk.CollectionConverters._
 
 /**
  * The single seam for state-table I/O: superstep checkpoints
@@ -25,6 +28,30 @@ object TableIO {
   /** Overwrite `path` with `df` in the configured table format. */
   def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").format(format(df.sparkSession)).save(path)
+
+  /**
+   * [[write]] that also returns the rows written from each partition of
+   * `df`, keyed by partition index. The rows are counted as the write job
+   * streams them, so the counts cost no second job.
+   */
+  def writeCounted(df: DataFrame, path: String): Map[Int, Long] = {
+    val spark = df.sparkSession
+    val counts = spark.sparkContext.collectionAccumulator[(Int, Long)]("rows per partition")
+    val counted = df.queryExecution.toRdd.mapPartitionsWithIndex { (p, rows) =>
+      new Iterator[InternalRow] {
+        private var n = 0L
+        private var open = true
+        def hasNext: Boolean = {
+          val more = rows.hasNext
+          if (!more && open) { open = false; counts.add(p -> n) }
+          more
+        }
+        def next(): InternalRow = { n += 1; rows.next() }
+      }
+    }
+    write(GraftSql.fromInternalRdd(spark, counted, df.schema), path)
+    counts.value.asScala.toMap
+  }
 
   /** Read a table previously written by [[write]]. */
   def read(spark: SparkSession, path: String): DataFrame =

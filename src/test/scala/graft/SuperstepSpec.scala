@@ -111,6 +111,71 @@ class SuperstepSpec extends SparkSpec {
       s"step plan ran ${acc.value} row-evals; expected 300 = rows × supersteps (single execution)")
   }
 
+  test("a checkpointed superstep is one job: it runs the step plan once, writes and counts") {
+    val dir = tmpDir("onejob")
+    val n = 100
+    val steps = 3
+    val acc = spark.sparkContext.longAccumulator("checkpointedRowEvals")
+    val touch = udf((x: Long) => { acc.add(1); x })
+    // ids, not a count: the context cleaner may free older RDDs meanwhile
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // AQE runs every shuffle stage as a job of its own; without it a
+    // superstep with a shuffle is one job of two stages
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (out, jobs) =
+      try org.apache.spark.JobCounter.count(spark.sparkContext) {
+        Superstep.run(spark.range(n).select(col("id").as("vid"), lit(0L).as("x")),
+          Superstep.Config(maxSupersteps = steps, checkpointDir = Some(dir))) { (state, ss) =>
+          StepResult(state.groupBy("vid").agg(max(touch(col("x") + 1)).as("x")), 0L,
+            converged = ss == steps)
+        }
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    // the one job before superstep 1 cuts the initial state
+    assert(jobs == 1 + steps, s"$jobs jobs for $steps checkpointed supersteps")
+    assert(acc.value == n * steps,
+      s"step plan ran ${acc.value} row-evals; expected ${n * steps} = rows × supersteps")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    (1 to steps).foreach { ss =>
+      val mf = json.readTree(Paths.get(s"$dir/superstep=$ss/manifest.json").toFile)
+      val parts = mf.get("partitions")
+      // the state's own shuffle partitions, counted by the write job
+      assert(parts.size == spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      var sum = 0L
+      parts.forEach(p => sum += p.get("rows").asLong())
+      assert(sum == mf.get("state_rows").asLong() && sum == n, s"superstep $ss: $mf")
+    }
+    assert(out.state.agg(min("x"), max("x")).collect()(0).toSeq == Seq(steps.toLong, steps.toLong))
+    graft.core.Lineage.release(out.state)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"run left persisted RDDs $left")
+  }
+
+  test("manifests are renamed into place; resume skips a missing or torn manifest") {
+    val dir = tmpDir("atomic")
+    Superstep.run(spark.range(3).select(col("id").as("vid"), lit(0L).as("x")),
+      Superstep.Config(maxSupersteps = 3, checkpointDir = Some(dir))) { (state, ss) =>
+      StepResult(state.withColumn("x", col("x") + 1L), 3L, converged = ss == 3)
+    }
+    // no temp file survives the rename
+    (1 to 3).foreach { ss =>
+      val names = Files.list(Paths.get(s"$dir/superstep=$ss")).toArray.map(_.toString)
+      assert(names.count(_.endsWith("manifest.json")) == 1 && !names.exists(_.endsWith(".tmp")),
+        names.mkString(","))
+    }
+    // a crash between superstep 3's data and its manifest: 2 is the resume point
+    val mf3 = Paths.get(s"$dir/superstep=3/manifest.json")
+    val whole = Files.readString(mf3)
+    Files.delete(mf3)
+    assert(Superstep.latestComplete(dir).map(_._1).contains(2))
+    // a torn manifest does not parse, so it never counts as complete, even
+    // though it already says so
+    val torn = whole.take(whole.indexOf("\"wall_ms\"") + 12)
+    assert(torn.contains("\"status\":\"complete\""), torn)
+    Files.writeString(mf3, torn)
+    assert(Superstep.latestComplete(dir).map(_._1).contains(2))
+  }
+
   test("superstep loop releases previous states' checkpoint blocks") {
     val before = spark.sparkContext.getPersistentRDDs.size
     val out = Superstep.run(
